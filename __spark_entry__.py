@@ -11152,11 +11152,15 @@ g AS (
   FROM pr),
 nd AS (
   SELECT n, pos, ssq,
-         1000000 * pos * (n - pos) AS refp,
-         1000000 * (1000000 * pos * (n - pos) - ssq * n) AS num
+         CAST(1000000 AS HUGEINT) * pos * (n - pos) AS refp,
+         CAST(1000000 AS HUGEINT)
+           * (CAST(1000000 AS HUGEINT) * pos * (n - pos)
+              - CAST(ssq AS HUGEINT) * n) AS num
   FROM g)
 SELECT n, pos, ssq,
-       CAST(CASE WHEN n > 0 THEN ssq * 1000000 // (n * 1000000) END
+       CAST(CASE WHEN n > 0
+                 THEN CAST(ssq AS HUGEINT) * 1000000
+                      // (CAST(n AS HUGEINT) * 1000000) END
             AS BIGINT) AS brier_ppm,
        CAST(CASE WHEN refp <> 0
                  THEN ((num) - (((num) % refp + refp) % refp)) // refp

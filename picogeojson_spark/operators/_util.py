@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -54,3 +56,40 @@ def spread_small_scans(df: DataFrame) -> DataFrame:
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
+
+
+def checkpoint_rows(df: DataFrame) -> tuple[DataFrame, int]:
+    """Materialize one round of an iterative operator: a local checkpoint
+    of ``df`` plus its row count, both from the same job.
+
+    Every round's state goes through here, so round N's plan reads round
+    N-1 as a flat RDD scan and never carries earlier rounds. Persisting
+    round state instead keeps each round's plan nested inside the next:
+    linear growth when a round reads one frame of the round before,
+    geometric when it reads two (BFS frontier + visited set, pointer
+    doubling), and a few rounds later the driver runs out of heap.
+
+    The count runs on the checkpoint's own RDD (``toRdd``): the job that
+    computes the checkpoint blocks also counts them, where
+    ``DataFrame.count`` would add a global aggregate and, under AQE, a
+    second job. Checkpoint blocks are not in the SQL CacheManager; Spark's
+    ContextCleaner drops them after the driver garbage-collects the frame.
+    """
+    df = df.localCheckpoint(eager=False)
+    return df, df._jdf.queryExecution().toRdd().count()
+
+
+@contextmanager
+def pinned(*dfs: DataFrame):
+    """Persist the inputs an iterative operator reads in every round (its
+    edge table and node spine) for the duration of the block, and release
+    them on return or on error, so nothing stays in the CacheManager once
+    the operator returns. Round state never goes here: see
+    :func:`checkpoint_rows`."""
+    for df in dfs:
+        df.persist()
+    try:
+        yield
+    finally:
+        for df in dfs:
+            df.unpersist()

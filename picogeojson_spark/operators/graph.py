@@ -19,18 +19,48 @@ mass is therefore not conserved, which is fine for ranking and keeps both
 sides trivially identical.
 
 Scale shape: per iteration, one equi-join of the rank vector with the
-(large, cached) out-degree-annotated edge table plus one map-side-combine
-aggregate back to nodes; iteration results are persisted (partitioning-
-preserving — see the loop comment) and every cached intermediate is
-released before returning. Hot dst nodes (the web's power law) are AQE
+(large, pinned) out-degree-annotated edge table plus one map-side-combine
+aggregate back to nodes. Hot dst nodes (the web's power law) are AQE
 skew-join territory; the integer semantics are unaffected by any re-plan.
+
+Round-state policy, shared by every iterative operator here (pagerank,
+hits, label_propagation, bfs_hops, sssp_bounded, closeness_sample,
+k_core, k_truss) and by ``web.resolve_redirects``:
+
+- the inputs read in every round (the edge table, the node spine) are
+  persisted for the call by ``_util.pinned`` and released on return or
+  error, so the CacheManager is empty once the operator returns;
+- each round's state is materialized by ``_util.checkpoint_rows``, a
+  local checkpoint whose job also yields the row count that early exits
+  and convergence tests need. Round N therefore plans against a flat
+  scan of round N-1. Persisted round state would instead nest every
+  earlier round's plan inside the next (geometrically when a round reads
+  two frames of the round before), and exhaust the driver heap within
+  about six rounds.
 """
 
 from __future__ import annotations
 
+import time
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window, functions as F
 
-from ._util import attach_scalar
+from ._util import attach_scalar, checkpoint_rows, pinned
+
+
+def _symmetric(edges: DataFrame, *carry) -> DataFrame:
+    """Both orientations of an undirected ``(u, v)`` edge list, with the
+    ``carry`` columns repeated on each."""
+    return edges.select("u", "v", *carry).union(
+        edges.select(F.col("v").alias("u"), F.col("u").alias("v"), *carry))
+
+
+def _endpoints(edges: DataFrame, a: str = "u", b: str = "v") -> DataFrame:
+    """Every endpoint occurrence of an edge list as one ``node`` column
+    (one row per edge end, not deduplicated)."""
+    return edges.select(F.col(a).alias("node")).union(
+        edges.select(F.col(b).alias("node")))
 
 
 def _jvm_gc_ms(spark) -> int:
@@ -42,19 +72,17 @@ def _jvm_gc_ms(spark) -> int:
                for i in range(beans.size()))
 
 
-def _iter_probe_start(spark, log):
+@contextmanager
+def _round_probe(spark, log, rnd):
+    """Append ``{"round", "wall_s", "gc_ms"}`` for the enclosed round to
+    ``log``; a no-op when ``log`` is None."""
     if log is None:
-        return None, None
-    import time as _time
-    return _time.time(), _jvm_gc_ms(spark)
-
-
-def _iter_probe_end(spark, log, rnd, t0, gc0):
-    if log is None:
+        yield
         return
-    import time as _time
+    t0, gc0 = time.time(), _jvm_gc_ms(spark)
+    yield
     log.append({"round": rnd,
-                "wall_s": round(_time.time() - t0, 4),
+                "wall_s": round(time.time() - t0, 4),
                 "gc_ms": _jvm_gc_ms(spark) - gc0})
 
 
@@ -112,115 +140,51 @@ def pagerank(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
     deg = e.groupBy("src").agg(F.count("*").alias("outdeg"))
-    # Cache the degree-annotated edge table partitioned on the join key and
-    # keep it as a PERSIST, not a localCheckpoint: a checkpoint is an opaque
-    # RDD scan whose outputPartitioning Catalyst no longer knows, so every
-    # iteration would re-Exchange the full edge table; the cached plan keeps
-    # hashpartitioning(src) visible and each iteration shuffles only the
-    # node-sized rank vector onto it. Locally the per-iteration exchange of
-    # a small edge table is cheap (~5-10%% measured at sf0.1), but at scale
-    # the edge table is the corpus-sized side — 8 avoided exchanges of it
-    # is the difference that matters at 100 TB.
-    e_deg = e.join(deg, "src").repartition("src").persist()
+    # The degree-annotated edge table is pinned partitioned on the join
+    # key, so each round shuffles only the node-sized rank vector onto it;
+    # at scale the edge table is the corpus-sized side. The node spine is
+    # pinned for the per-round left join that keeps in-edge-less nodes.
+    e_deg = e.join(deg, "src").repartition("src")
+    nodes = _endpoints(e, "src", "dst").distinct()
+    with pinned(e_deg, nodes):
+        n_nodes = nodes.count()
+        if seed_vals is None:
+            r0 = scale // max(n_nodes, 1)   # an empty graph ranks no rows
+            base = (r0 * (100 - damping_pct)) // 100
+            r0_col = F.lit(r0).cast("long")
+            base_col = F.lit(base).cast("long")
+        else:
+            r0_seed = scale // len(seed_vals)
+            base_seed = (r0_seed * (100 - damping_pct)) // 100
+            is_seed = F.col("node").isin(seed_vals)
+            r0_col = F.when(is_seed, F.lit(r0_seed)).otherwise(F.lit(0)) \
+                .cast("long")
+            base_col = F.when(is_seed, F.lit(base_seed)) \
+                .otherwise(F.lit(0)).cast("long")
 
-    # distinct() leaves nodes hash-partitioned by node and persist keeps
-    # that partitioning visible to Catalyst — the per-iteration left join
-    # against the (node-keyed) contribution aggregate then needs no
-    # exchange on either side.
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        out = nodes.withColumn("rank", F.lit(0).cast("long")) \
-            .localCheckpoint(eager=True)
-        e_deg.unpersist()
-        nodes.unpersist()
-        return out
-    if seed_vals is None:
-        r0 = scale // n_nodes
-        base = (r0 * (100 - damping_pct)) // 100
-        r0_col = F.lit(r0).cast("long")
-        base_col = F.lit(base).cast("long")
-    else:
-        r0_seed = scale // len(seed_vals)
-        base_seed = (r0_seed * (100 - damping_pct)) // 100
-        is_seed = F.col("node").isin(seed_vals)
-        r0_col = F.when(is_seed, F.lit(r0_seed)).otherwise(F.lit(0)) \
-            .cast("long")
-        base_col = F.when(is_seed, F.lit(base_seed)).otherwise(F.lit(0)) \
-            .cast("long")
-
-    ranks = nodes.withColumn("rank", r0_col)
-    # Iteration results are PERSISTED, not localCheckpointed: a checkpoint
-    # is an opaque RDD scan whose outputPartitioning Catalyst forgets, so
-    # the next iteration's rank-vector join would re-exchange it by src.
-    # The cached plan keeps hashpartitioning(node) (alias-rewritten to src
-    # through the rename) visible, and with nodes and e_deg also cached
-    # partitioned, each iteration's ONLY exchange is the map-side-combined
-    # contribution aggregate. At sf0.001-0.1 AQE broadcasts the tiny rank
-    # vector and the two shapes execute identically (measured: 2 stages,
-    # 1 shuffle write per iteration either way); at 1e9-node scale the rank
-    # vector is not broadcastable and the preserved partitioning is the
-    # difference. Each iteration is materialized eagerly (count) so the
-    # PREVIOUS iteration's cache can be released immediately — the
-    # one-round-late handoff bounds pinned memory at two rank vectors
-    # regardless of iteration count (a 1e9-node run pins ~2x16 GB, not
-    # iterations x 16 GB), at the cost of one count-job per round, the
-    # standard shape for iterative graph algorithms.
-    prev = None
-    for _it in range(iterations):
-        _t0, _gc0 = _iter_probe_start(edges.sparkSession, iteration_log)
-        contrib = (
-            ranks.withColumnRenamed("node", "src")
-            .join(e_deg, "src")
-            .select(
-                F.col("dst").alias("node"),
-                F.expr("rank div outdeg").alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        ranks = (
-            nodes.join(contrib, "node", "left")
-            .select(
-                "node",
-                (
-                    base_col
-                    + F.expr(
-                        "(coalesce(contrib, 0L) * {d}) div 100".format(
-                            d=damping_pct
-                        )
+        ranks = nodes.withColumn("rank", r0_col)
+        for it in range(iterations):
+            with _round_probe(edges.sparkSession, iteration_log, it):
+                contrib = (
+                    ranks.withColumnRenamed("node", "src")
+                    .join(e_deg, "src")
+                    .select(
+                        F.col("dst").alias("node"),
+                        F.expr("rank div outdeg").alias("c"),
                     )
-                ).alias("rank"),
-            )
-            .persist()
-        )
-        try:
-            ranks.count()
-        except Exception:
-            ranks.unpersist()
-            if prev is not None:
-                prev.unpersist()
-            e_deg.unpersist()
-            nodes.unpersist()
-            raise
-        _iter_probe_end(edges.sparkSession, iteration_log, _it, _t0, _gc0)
-        if prev is not None:
-            prev.unpersist()
-        prev = ranks
-    # detach the result from the cached lineage, then release everything:
-    # nothing stays pinned in the SQL CacheManager after the operator
-    # returns (same lifecycle as duplicate_clusters' eager checkpoints)
-    out = ranks.localCheckpoint(eager=True)
-    if prev is not None:
-        prev.unpersist()
-    e_deg.unpersist()
-    nodes.unpersist()
-    return out
+                    .groupBy("node")
+                    .agg(F.sum("c").alias("contrib"))
+                )
+                ranks, _ = checkpoint_rows(
+                    nodes.join(contrib, "node", "left").select(
+                        "node",
+                        (base_col + F.expr(
+                            "(coalesce(contrib, 0L) * {d}) div 100".format(
+                                d=damping_pct))).alias("rank"),
+                    ))
+        if not iterations:   # detach the result from the pinned spine
+            ranks, _ = checkpoint_rows(ranks)
+    return ranks
 
 
 def purchase_graph(orders: DataFrame, lineitem: DataFrame) -> DataFrame:
@@ -266,18 +230,12 @@ def hits(
     ``scale``, and are left untouched when it doesn't (tiny graphs). Pick
     ``scale`` so ``n_edges * 2 * scale < 2^63``.
 
-    Scale shape: the distinct edge table and node spine are persisted
-    once; each half-round is one rank-vector equi-join onto the edges plus
-    one map-side-combined aggregate, and the corpus-wide normalizer is a
-    1-row aggregate broadcast back — never collected to the driver. Each
-    half-round's node-sized vector is materialized with an EAGER
-    localCheckpoint (not the persist handoff pagerank uses): HITS
-    alternates join keys between half-rounds (src then dst), so there is
-    no partitioning to preserve across rounds, and the hard lineage cut is
-    what keeps round N's plan O(1) instead of O(N) — the normalizer's
-    broadcast-hint subtree defeats the CacheManager's plan matching, so a
-    persisted vector here re-derives the whole history every round
-    (measured ~3.5x wall per round before the cut).
+    Scale shape: the distinct edge table and node spine are pinned for
+    the call; each half-round is one rank-vector equi-join onto the edges
+    plus one map-side-combined aggregate, and the corpus-wide normalizer
+    is a 1-row aggregate broadcast back — never collected to the driver.
+    Each half-round's node-sized vector is a round checkpoint (the module
+    policy), so round N plans against a flat scan of round N-1.
     """
     if iterations < 0:
         raise ValueError("iterations must be >= 0")
@@ -285,67 +243,41 @@ def hits(
     e = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).distinct()
-    e_src = e.repartition("src").persist()
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-    nodes.count()
+    e_src = e.repartition("src")
+    nodes = _endpoints(e, "src", "dst").distinct()
 
     def _norm(raw, col):
         s = raw.agg(F.sum(col).cast("long").alias("_s"))
-        return (
-            attach_scalar(nodes.join(raw, "node", "left"), s)
-            .select(
+        return checkpoint_rows(
+            attach_scalar(nodes.join(raw, "node", "left"), s).select(
                 "node",
                 F.expr(
                     "coalesce({c}, 0L) div greatest(1L, _s div {k})".format(
                         c=col, k=int(scale))
                 ).alias(col[:-4]),
-            )
-            .localCheckpoint(eager=True)
-        )
+            ))[0]
 
-    hubs = nodes.withColumn("hub", F.lit(int(scale)).cast("long"))
-    auths = nodes.withColumn("auth", F.lit(0).cast("long"))
-    try:
-        for _it in range(iterations):
-            _t0, _gc0 = _iter_probe_start(edges.sparkSession, iteration_log)
-            a_raw = (
-                hubs.withColumnRenamed("node", "src")
-                .join(e_src, "src")
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum("hub").cast("long").alias("auth_raw"))
-            )
-            auths = _norm(a_raw, "auth_raw")
+    with pinned(e_src, nodes):
+        hubs = nodes.withColumn("hub", F.lit(int(scale)).cast("long"))
+        auths = nodes.withColumn("auth", F.lit(0).cast("long"))
+        for it in range(iterations):
+            with _round_probe(edges.sparkSession, iteration_log, it):
+                auths = _norm(
+                    hubs.withColumnRenamed("node", "src")
+                    .join(e_src, "src")
+                    .groupBy(F.col("dst").alias("node"))
+                    .agg(F.sum("hub").cast("long").alias("auth_raw")),
+                    "auth_raw")
+                hubs = _norm(
+                    auths.withColumnRenamed("node", "dst")
+                    .join(e_src, "dst")
+                    .groupBy(F.col("src").alias("node"))
+                    .agg(F.sum("auth").cast("long").alias("hub_raw")),
+                    "hub_raw")
 
-            h_raw = (
-                auths.withColumnRenamed("node", "dst")
-                .join(e_src, "dst")
-                .groupBy(F.col("src").alias("node"))
-                .agg(F.sum("auth").cast("long").alias("hub_raw"))
-            )
-            hubs = _norm(h_raw, "hub_raw")
-            _iter_probe_end(edges.sparkSession, iteration_log,
-                            _it, _t0, _gc0)
-
-        out = (
-            nodes.join(hubs.withColumnRenamed("node", "n1"),
-                       F.col("node") == F.col("n1"), "left")
-            .join(auths.withColumnRenamed("node", "n2"),
-                  F.col("node") == F.col("n2"), "left")
-            .select(
-                "node",
-                F.coalesce("hub", F.lit(0)).cast("long").alias("hub"),
-                F.coalesce("auth", F.lit(0)).cast("long").alias("auth"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        e_src.unpersist()
-        nodes.unpersist()
+        # both vectors already carry every node (``_norm`` left-joins the
+        # spine), so one inner join assembles the result
+        out, _ = checkpoint_rows(hubs.join(auths, "node"))
     return out
 
 
@@ -457,9 +389,7 @@ def _enumerate_triangles(edges: DataFrame) -> DataFrame:
     # consumer — measured 6 redundant scans at gate scale. Lazy local
     # checkpoints materialize each exactly once.
     edges = edges.select("u", "v").localCheckpoint(eager=False)
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").alias("deg")).select(
+    deg = _symmetric(edges).groupBy("u").agg(F.count("*").alias("deg")).select(
         F.col("u").alias("node"),
         (F.col("deg").cast("long") * F.lit(1 << 32) + F.col("u"))
         .alias("ord_key"),
@@ -538,41 +468,33 @@ def k_core(edges: DataFrame, k: int, max_rounds: int = 30) -> DataFrame:
     The k-core is order-independent (the fixpoint is unique no matter the
     peeling schedule), so the distributed round — ONE map-side-combined
     degree aggregate + two semi-joins per round — computes exactly the
-    sequential result. Edge sets shrink monotonically, so the count probe
-    that doubles as the per-round materializer (lazy localCheckpoint,
-    the duplicate_clusters pattern) is also the convergence test: equal
-    counts imply equal sets.
+    sequential result. Edge sets shrink monotonically, so each round's
+    checkpoint count (the module's round-state policy) is also the
+    convergence test: equal counts imply equal sets.
 
     Rounds are data-dependent (a path peels one link per round); callers
     pin ``max_rounds`` and get a loud RuntimeError instead of a silently
     truncated core.
     """
-    e = (edges.select("u", "v").filter(F.col("u") != F.col("v"))
-         .distinct().localCheckpoint(eager=False))
-    n_edges = e.count()
+    e, n_edges = checkpoint_rows(
+        edges.select("u", "v").filter(F.col("u") != F.col("v")).distinct())
     for _ in range(max_rounds):
         if n_edges == 0:
             break
-        sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        keep = (sym.groupBy("u").agg(F.count("*").alias("d"))
+        keep = (_symmetric(e).groupBy("u").agg(F.count("*").alias("d"))
                 .filter(F.col("d") >= F.lit(int(k)))
                 .select(F.col("u").alias("n")))
-        nxt = (
+        nxt, n_nxt = checkpoint_rows(
             e.join(keep.select(F.col("n").alias("u")), "u", "left_semi")
             .join(keep.select(F.col("n").alias("v")), "v", "left_semi")
-            .select("u", "v")
-            .localCheckpoint(eager=False)
-        )
-        n_nxt = nxt.count()
+            .select("u", "v"))
         if n_nxt == n_edges:
-            e = nxt
             break
         e, n_edges = nxt, n_nxt
     else:
         raise RuntimeError(
             "k_core did not converge in {} rounds".format(max_rounds))
-    sym = e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    return sym.groupBy(F.col("u").alias("node")).agg(
+    return _symmetric(e).groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("long").alias("core_degree"))
 
 
@@ -586,55 +508,30 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     function of the edge set, so the oracle can unroll it).
 
     Scale shape: per round ONE equi-join of the label vector with the
-    symmetrized edge table (kept persisted, hash-partitioned on the
-    neighbor key so every round reuses the same layout), one map-side-
-    combined (node, label) count, and one per-node top-1 window
-    (WindowGroupLimit — partial rank before the shuffle).  Iteration
-    vectors use the one-round-late persist handoff (bounded at two
-    vectors, the pagerank/bpe pattern).  Labels never leave the JVM.
+    symmetrized edge table (pinned, hash-partitioned on the neighbor key
+    so every round reuses the same layout), one map-side-combined
+    (node, label) count, and one per-node top-1 window (WindowGroupLimit
+    — partial rank before the shuffle).  Each round's label vector is a
+    round checkpoint (the module policy).  Labels never leave the JVM.
     """
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    from pyspark.sql import Window
-
-    sym = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("v")
-        .persist()
-    )
-    labels = (
-        sym.select(F.col("u").alias("node")).distinct()
-        .select("node", F.col("node").alias("label"))
-        .persist()
-    )
-    labels.count()
+    sym = _symmetric(edges).repartition("v")
     w = Window.partitionBy("node").orderBy(F.desc("cnt"), F.asc("label"))
-    prev = None
-    try:
+    with pinned(sym):
+        labels = (sym.select(F.col("u").alias("node")).distinct()
+                  .select("node", F.col("node").alias("label")))
         for _ in range(rounds):
-            nb = sym.join(labels.withColumnRenamed("node", "v"), on="v")
             cnt = (
-                nb.groupBy(F.col("u").alias("node"), "label")
+                sym.join(labels.withColumnRenamed("node", "v"), on="v")
+                .groupBy(F.col("u").alias("node"), "label")
                 .agg(F.count("*").alias("cnt"))
             )
-            new = (
+            labels, _ = checkpoint_rows(
                 cnt.withColumn("rn", F.row_number().over(w))
                 .filter(F.col("rn") == 1)
-                .select("node", "label")
-                .persist()
-            )
-            new.count()
-            if prev is not None:
-                prev.unpersist()
-            prev, labels = labels, new
-        out = labels.localCheckpoint(eager=True)
-    finally:
-        sym.unpersist()
-        if prev is not None:
-            prev.unpersist()
-        labels.unpersist()
-    return out
+                .select("node", "label"))
+    return labels
 
 
 def link_prediction(edges: DataFrame,
@@ -659,8 +556,7 @@ def link_prediction(edges: DataFrame,
     joins — a hub shared by millions says little about any one pair
     anyway; documented approximation, default exact).
     """
-    sym = edges.select(F.col("u").alias("a"), F.col("v").alias("m")).union(
-        edges.select(F.col("v").alias("a"), F.col("u").alias("m")))
+    sym = _symmetric(edges).toDF("a", "m")
     deg = sym.groupBy("a").agg(F.count("*").cast("long").alias("deg"))
     mids = sym
     if max_mid_degree is not None:
@@ -703,60 +599,47 @@ def bfs_hops(edges: DataFrame, sources: DataFrame,
     ``max_hops`` rounds (empty frontiers are idempotent no-ops).
 
     Scale shape: each round joins ONLY the current frontier (shrinking
-    after the wave peaks) against the symmetrized edge table — kept
-    persisted and hash-partitioned on the join key so every round reuses
-    one layout — then one distinct and one anti-join against the
-    visited set.  Frontier and visited vectors use the one-round-late
-    persist handoff (pagerank/lpa pattern); early-exits on an empty
-    frontier, so diameter-small graphs never pay the full bound.  Hop
-    values never leave the JVM.
+    after the wave peaks) against the symmetrized edge table — pinned and
+    hash-partitioned on the join key so every round reuses one layout —
+    then one distinct and one anti-join against the visited set.  The
+    frontier and the visited set are round checkpoints (the module
+    policy); the frontier's count is the early exit on an empty frontier,
+    so diameter-small graphs never pay the full bound.  Hop values never
+    leave the JVM.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    sym = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-        .persist()
-    )
-    dist = (
+    return _bfs_layers(
+        edges,
         sources.select("node").distinct()
-        .withColumn("hops", F.lit(0).cast("long"))
-        .persist()
-    )
-    dist.count()
-    frontier = dist.select("node")
-    stale = []
-    try:
+        .withColumn("hops", F.lit(0).cast("long")),
+        max_hops)
+
+
+def _bfs_layers(edges: DataFrame, dist: DataFrame, max_hops: int,
+                key=()) -> DataFrame:
+    """The BFS frontier loop behind :func:`bfs_hops` and
+    :func:`closeness_sample`. ``dist`` holds the sources as ``(*key,
+    node, hops=0)``; each ``key`` value runs its own BFS (closeness keys
+    by seed). Returns the visited set ``(*key, node, hops)`` after at
+    most ``max_hops`` layers."""
+    ids = [*key, "node"]
+    sym = _symmetric(edges).repartition("u")
+    with pinned(sym):
+        dist, _ = checkpoint_rows(dist)
+        frontier = dist
         for h in range(1, max_hops + 1):
-            cand = (
-                sym.join(frontier.withColumnRenamed("node", "u"), on="u")
-                .select(F.col("v").alias("node"))
+            frontier, n_new = checkpoint_rows(
+                sym.join(frontier.select(*key, F.col("node").alias("u")),
+                         on="u")
+                .select(*key, F.col("v").alias("node"))
                 .distinct()
-            )
-            new = (
-                cand.join(dist.select("node"), on="node", how="left_anti")
-                .withColumn("hops", F.lit(h).cast("long"))
-                .persist()
-            )
-            if new.count() == 0:
-                new.unpersist()
+                .join(dist.select(*ids), on=ids, how="left_anti")
+                .withColumn("hops", F.lit(h).cast("long")))
+            if n_new == 0:
                 break
-            nxt = dist.union(new).persist()
-            nxt.count()
-            stale.append(dist)
-            stale.append(new)
-            if len(stale) > 4:   # one-round-late release
-                stale.pop(0).unpersist()
-                stale.pop(0).unpersist()
-            dist, frontier = nxt, new.select("node")
-        out = dist.localCheckpoint(eager=True)
-    finally:
-        sym.unpersist()
-        for df in stale:
-            df.unpersist()
-        dist.unpersist()
-    return out
+            dist, _ = checkpoint_rows(dist.union(frontier))
+    return dist
 
 
 def degree_assortativity(edges: DataFrame) -> DataFrame:
@@ -790,9 +673,8 @@ def degree_assortativity(edges: DataFrame) -> DataFrame:
     max degree ~3e4 fits; beyond that the stats columns remain the
     contract and r is recovered from them off-plan).
     """
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    deg = sym.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
+    deg = _symmetric(edges).groupBy("u").agg(
+        F.count("*").cast("long").alias("deg"))
     per_edge = (
         edges
         .join(deg.select(F.col("u"), F.col("deg").alias("deg_u")), on="u")
@@ -848,10 +730,9 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     appear with cc_ppm = 0), never a neighbor-pair materialization
     beyond the oriented wedge stream.
     """
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     deg = (
-        sym.groupBy("u").agg(F.count("*").cast("long").alias("deg"))
+        _symmetric(edges).groupBy("u")
+        .agg(F.count("*").cast("long").alias("deg"))
         .filter(F.col("deg") >= 2)
         .select(F.col("u").alias("node"), "deg")
     )
@@ -906,8 +787,7 @@ def neighbor_feature_agg(
     Isolated nodes are absent (nodes are derived from edges, the graph
     family convention).
     """
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = _symmetric(edges)
     feats = features.select(
         F.col(node_col).alias("v"),
         F.col(feat_col).cast("long").alias("fv"))
@@ -975,73 +855,41 @@ def sssp_bounded(
     on a no-improvement round is sound because D is then a fixed point.
 
     Scale shape: each round joins ONLY the frontier against the
-    symmetric edge table (persisted, hash-partitioned on the join key —
-    one layout reused every round), then one map-side-combined min per
-    candidate node and one min-merge groupBy over the node-bounded dist
-    vector.  The one-round-late persist handoff (pagerank/bfs pattern)
-    bounds the cached working set at two vectors; weights and distances
-    never leave the JVM.
+    symmetric edge table (pinned, hash-partitioned on the join key — one
+    layout reused every round), then one map-side-combined min per
+    candidate node, one left join that keeps only the improved nodes, and
+    one min-merge groupBy over the node-bounded dist vector.  The improved
+    frontier and the dist vector are round checkpoints (the module
+    policy); the frontier's count is the early exit.  Weights and
+    distances never leave the JVM.
     """
     if max_rounds < 0:
         raise ValueError("max_rounds must be >= 0")
-    sym = (
-        edges.select("u", "v", F.col("w").cast("long").alias("w"))
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v"),
-                            F.col("w").cast("long").alias("w")))
+    sym = _symmetric(edges, F.col("w").cast("long").alias("w")) \
         .repartition("u")
-        .persist()
-    )
-    dist = (
-        sources.select("node").distinct()
-        .withColumn("dist", F.lit(0).cast("long"))
-        .persist()
-    )
-    dist.count()
-    frontier = dist
-    stale = []
-    try:
-        for _ in range(1, max_rounds + 1):
-            cand = (
+    with pinned(sym):
+        dist, _ = checkpoint_rows(
+            sources.select("node").distinct()
+            .withColumn("dist", F.lit(0).cast("long")))
+        frontier = dist
+        for _ in range(max_rounds):
+            frontier, n_improved = checkpoint_rows(
                 sym.join(
                     frontier.select(F.col("node").alias("u"),
                                     F.col("dist").alias("du")), on="u")
-                .select(F.col("v").alias("node"),
-                        (F.col("du") + F.col("w")).alias("dist"))
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-            )
-            merged = (
-                dist.union(cand)
-                .groupBy("node")
-                .agg(F.min("dist").alias("dist"))
-                .persist()
-            )
-            improved = (
-                merged.join(
-                    dist.select("node", F.col("dist").alias("_old")),
-                    on="node", how="left")
+                .groupBy(F.col("v").alias("node"))
+                .agg(F.min(F.col("du") + F.col("w")).alias("dist"))
+                .join(dist.select("node", F.col("dist").alias("_old")),
+                      on="node", how="left")
                 .filter(F.col("_old").isNull()
                         | (F.col("dist") < F.col("_old")))
-                .select("node", "dist")
-                .persist()
-            )
-            if improved.count() == 0:
-                merged.unpersist()
-                improved.unpersist()
+                .select("node", "dist"))
+            if n_improved == 0:
                 break
-            stale.append(dist)
-            stale.append(improved)
-            if len(stale) > 4:   # one-round-late release
-                stale.pop(0).unpersist()
-                stale.pop(0).unpersist()
-            dist, frontier = merged, improved
-        out = dist.localCheckpoint(eager=True)
-    finally:
-        sym.unpersist()
-        for df in stale:
-            df.unpersist()
-        dist.unpersist()
-    return out
+            dist, _ = checkpoint_rows(
+                dist.union(frontier).groupBy("node")
+                .agg(F.min("dist").alias("dist")))
+    return dist
 
 
 def edge_support(edges: DataFrame) -> DataFrame:
@@ -1090,28 +938,22 @@ def k_truss(edges: DataFrame, k: int = 4, rounds: int = 3) -> DataFrame:
 
     Scale shape: each round is one O(m^1.5) degree-ordered support pass
     (see :func:`edge_support`) on a SHRINKING edge set + one broadcast-
-    able filter; eager localCheckpoints cut the per-round lineage so
-    round i+1 replans from materialized edges, never re-deriving i
-    triangle passes.
+    able filter; the surviving edges are a round checkpoint (the module
+    policy), so round i+1 replans from materialized edges, never
+    re-deriving i triangle passes, and its count is the fixed-point test.
     """
     if k < 3:
         raise ValueError("k must be >= 3 (k=3 keeps triangle edges)")
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    e = edges.select("u", "v").localCheckpoint(eager=True)
-    n = e.count()
+    e, n = checkpoint_rows(edges.select("u", "v"))
     for _ in range(rounds):
-        keep = (
-            edge_support(e)
-            .filter(F.col("support") >= k - 2)
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-        nk = keep.count()
-        e = keep
+        keep, nk = checkpoint_rows(
+            edge_support(e).filter(F.col("support") >= k - 2)
+            .select("u", "v"))
         if nk == n:      # fixed point: the true k-truss
             break
-        n = nk
+        e, n = keep, nk
     return edge_support(e)
 
 
@@ -1134,7 +976,7 @@ def random_walks(edges: DataFrame, walk_length: int = 4,
     step 0 = the start node.
 
     Scale shape: the ranked adjacency (row_number + count over one
-    window — ONE hash shuffle on src) is persisted and reused by all
+    window — ONE hash shuffle on src) is pinned and reused by all
     ``walk_length`` rounds; each round is one frontier ⋈ adjacency hash
     equi-join on that SAME key with the rank pick evaluated inside the
     join condition, so exactly one row per walk survives and the
@@ -1152,10 +994,8 @@ def random_walks(edges: DataFrame, walk_length: int = 4,
             F.row_number().over(w).alias("_rk"),
             F.count("*").over(Window.partitionBy("src")).alias("_deg"),
         )
-        .persist()
     )
-    adj.count()
-    try:
+    with pinned(adj):
         state = (
             adj.select(F.col("src").alias("walk_id")).distinct()
             .withColumn("cur", F.col("walk_id"))
@@ -1182,9 +1022,8 @@ def random_walks(edges: DataFrame, walk_length: int = 4,
             out = out.union(state.select(
                 "walk_id", F.lit(t).cast("long").alias("step"),
                 F.col("cur").alias("node")))
-        return out.localCheckpoint(eager=True)
-    finally:
-        adj.unpersist()
+        out, _ = checkpoint_rows(out)
+    return out
 
 
 def graph_summary(edges: DataFrame) -> DataFrame:
@@ -1198,7 +1037,7 @@ def graph_summary(edges: DataFrame) -> DataFrame:
     Self-loops are excluded and edges dedup'd first (reciprocity is
     defined on the simple directed graph).
 
-    Scale shape: the cleaned edge set persists once and feeds (a) ONE
+    Scale shape: the cleaned edge set is pinned and feeds (a) ONE
     self equi-join on the composite (src,dst)=(dst,src) key — a hash
     join, never edge x edge — as a LEFT SEMI probe, (b) two map-side-
     combined degree aggregates, (c) the node-set distinct.  Every branch
@@ -1210,19 +1049,15 @@ def graph_summary(edges: DataFrame) -> DataFrame:
         edges.select("src", "dst")
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .persist()
     )
-    e.count()
-    try:
+    with pinned(e):
         a, b = e.alias("a"), e.alias("b")
         recip = a.join(
             b, (F.col("a.src") == F.col("b.dst"))
             & (F.col("a.dst") == F.col("b.src")), "left_semi")
         base = e.agg(F.count("*").cast("long").alias("n_edges"))
         nodes = (
-            e.select(F.col("src").alias("x"))
-            .union(e.select(F.col("dst").alias("x")))
-            .distinct()
+            _endpoints(e, "src", "dst").distinct()
             .agg(F.count("*").cast("long").alias("n_nodes"))
         )
         nrec = recip.agg(F.count("*").cast("long").alias("n_recip"))
@@ -1230,7 +1065,7 @@ def graph_summary(edges: DataFrame) -> DataFrame:
                 .agg(F.max("_d").cast("long").alias("max_out")))
         din = (e.groupBy("dst").agg(F.count("*").alias("_d"))
                .agg(F.max("_d").cast("long").alias("max_in")))
-        out = attach_scalar(
+        out, _ = checkpoint_rows(attach_scalar(
             attach_scalar(attach_scalar(attach_scalar(base, nodes), nrec),
                           dout), din
         ).select(
@@ -1238,10 +1073,8 @@ def graph_summary(edges: DataFrame) -> DataFrame:
             F.expr("cast(div(n_recip * cast(1000000 as bigint), n_edges)"
                    " as bigint)").alias("reciprocity_ppm"),
             "max_out", "max_in",
-        ).localCheckpoint(eager=True)
-        return out
-    finally:
-        e.unpersist()
+        ))
+    return out
 
 
 def closeness_sample(edges: DataFrame, seeds: DataFrame,
@@ -1271,78 +1104,35 @@ def closeness_sample(edges: DataFrame, seeds: DataFrame,
     outputs are pure functions of the edge/seed sets; the oracle
     unrolls the identical per-seed layer expansion.
 
-    Scale shape: bfs_hops's frontier discipline carrying (seed, node)
-    pairs — per round ONE hash equi-join of the CURRENT frontier
-    against the persisted symmetric edge table, one distinct, one
-    anti-join against the visited set; one-round-late persist handoff;
-    early exit on an empty frontier.  Final rollup is ONE per-seed
-    aggregate.  Frontier volume is sum of per-seed reach — the
-    documented cost of sampling more landmarks.
+    Scale shape: the :func:`bfs_hops` frontier loop keyed by seed — per
+    round ONE hash equi-join of the CURRENT (seed, node) frontier against
+    the pinned symmetric edge table, one distinct, one anti-join against
+    the visited set, both sets round checkpoints; early exit on an empty
+    frontier.  Final rollup is ONE per-seed aggregate.  Frontier volume
+    is sum of per-seed reach — the documented cost of sampling more
+    landmarks.
     """
     if max_hops < 0:
         raise ValueError("max_hops must be >= 0")
-    sym = (
-        edges.select("u", "v")
-        .union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition("u")
-        .persist()
-    )
-    dist = (
+    dist = _bfs_layers(
+        edges,
         seeds.select("seed").distinct()
         .select("seed", F.col("seed").alias("node"),
-                F.lit(0).cast("long").alias("hops"))
-        .persist()
+                F.lit(0).cast("long").alias("hops")),
+        max_hops, key=("seed",))
+    return dist.groupBy("seed").agg(
+        F.count("*").cast("long").alias("reached"),
+        F.sum("hops").cast("long").alias("sum_hops"),
+        F.sum(F.when(F.col("hops") > 0, F.expr("div(1000000L, hops)"))
+              .otherwise(F.lit(0))).cast("long").alias("harmonic_x1e6"),
+    ).select(
+        "seed", "reached", "sum_hops",
+        F.when(F.col("sum_hops") > 0,
+               F.expr("cast(div((reached - 1) * 1000000L,"
+                      " sum_hops) as bigint)"))
+        .alias("closeness_ppm"),
+        "harmonic_x1e6",
     )
-    dist.count()
-    frontier = dist.select("seed", "node")
-    stale = []
-    try:
-        for h in range(1, max_hops + 1):
-            cand = (
-                sym.join(frontier.withColumnRenamed("node", "u"), on="u")
-                .select("seed", F.col("v").alias("node"))
-                .distinct()
-            )
-            new = (
-                cand.join(dist.select("seed", "node"),
-                          on=["seed", "node"], how="left_anti")
-                .withColumn("hops", F.lit(h).cast("long"))
-                .persist()
-            )
-            if new.count() == 0:
-                new.unpersist()
-                break
-            nxt = dist.union(new).persist()
-            nxt.count()
-            stale.append(dist)
-            stale.append(new)
-            if len(stale) > 4:
-                stale.pop(0).unpersist()
-                stale.pop(0).unpersist()
-            dist, frontier = nxt, new.select("seed", "node")
-        out = (
-            dist.groupBy("seed").agg(
-                F.count("*").cast("long").alias("reached"),
-                F.sum("hops").cast("long").alias("sum_hops"),
-                F.sum(F.when(F.col("hops") > 0,
-                             F.expr("div(1000000L, hops)"))
-                      .otherwise(F.lit(0))).cast("long")
-                .alias("harmonic_x1e6"),
-            ).select(
-                "seed", "reached", "sum_hops",
-                F.when(F.col("sum_hops") > 0,
-                       F.expr("cast(div((reached - 1) * 1000000L,"
-                              " sum_hops) as bigint)"))
-                .alias("closeness_ppm"),
-                "harmonic_x1e6",
-            ).localCheckpoint(eager=True)
-        )
-    finally:
-        sym.unpersist()
-        for df in stale:
-            df.unpersist()
-        dist.unpersist()
-    return out
 
 
 def negative_sample(edges: DataFrame, k: int = 3,
@@ -1373,14 +1163,8 @@ def negative_sample(edges: DataFrame, k: int = 3,
     """
     if k < 1:
         raise ValueError("need k >= 1")
-    nodes = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
-        .distinct()
-    )
+    nodes = _endpoints(edges).distinct()
     mx = nodes.agg(F.max("node").cast("long").alias("_mx"))
-    from ._util import attach_scalar
-
     cand = attach_scalar(nodes, mx).select(
         F.col("node").alias("u"),
         F.explode(F.sequence(F.lit(0), F.lit(int(k) - 1))).alias("j"),
@@ -1397,11 +1181,9 @@ def negative_sample(edges: DataFrame, k: int = 3,
     )
     exists = cand.join(
         nodes.withColumnRenamed("node", "neg"), on="neg", how="left_semi")
-    sym = edges.select("u", "v").union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
     return (
         exists.filter(F.col("u") != F.col("neg"))
-        .join(sym.withColumnRenamed("v", "neg"), on=["u", "neg"],
+        .join(_symmetric(edges).withColumnRenamed("v", "neg"), on=["u", "neg"],
               how="left_anti")
         .select("u", "j", "neg")
     )
@@ -1485,8 +1267,7 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
              .alias("intra_edges"))
     )
     deg = (
-        e.select(F.col("u").alias("node"))
-        .union(e.select(F.col("v").alias("node")))
+        _endpoints(e)
         .groupBy("node").agg(F.count("*").cast("long").alias("_d"))
     )
     comm = (
@@ -1498,8 +1279,6 @@ def modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:
         F.coalesce(F.sum(F.expr("cast(_dc as decimal(38,0)) * _dc")),
                    F.lit(0).cast("decimal(38,0)")).alias("sum_deg_sq"),
     )
-    from ._util import attach_scalar
-
     out = attach_scalar(attach_scalar(m_agg, intra), csum)
     num = ("(cast(1000000 as decimal(38,0))"
            " * (4 * cast(m_edges as decimal(38,0)) * intra_edges"
@@ -1527,8 +1306,7 @@ def degree_profile(edges: DataFrame) -> DataFrame:
     log-bounded (<= 64-row) bucket table.  No joins, no python.
     """
     deg = (
-        edges.select(F.col("u").alias("node"))
-        .union(edges.select(F.col("v").alias("node")))
+        _endpoints(edges)
         .groupBy("node").agg(F.count("*").cast("long").alias("_d"))
     )
     b = deg.select(

@@ -696,8 +696,9 @@ def ams_f2(df: DataFrame, key_col: str = "key", k: int = 16,
     runs over the k-element literal array.  Mergeable: Z vectors from
     shards ADD — re-aggregate partials and finalize identically.
     """
-    if k < 1 or k > 32:
-        raise ValueError("need 1 <= k <= 32 (one 32-bit hash word)")
+    if k < 2 or k > 32:
+        raise ValueError("need 2 <= k <= 32 (one 32-bit hash word; the"
+                         " lower median is the (k // 2)-th estimate)")
     h = F.conv(F.substring(F.md5(F.concat(
         F.lit(salt + ":"), F.col(key_col).cast("string"))), 1, 8),
         16, 10).cast("long")

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Column
 from pyspark.sql import functions as F
 
+from ._util import checkpoint_rows
+
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
 
 
@@ -515,46 +517,30 @@ def resolve_redirects(
     on terminals, doubling composes exactly — f_{k+1} = f_k ∘ f_k — so
     the result equals 2^rounds SINGLE steps and the oracle replays it
     with a depth-capped recursive walk.
+
+    Scale shape: each round is one self equi-join of the pointer table.
+    Every round reads the previous table twice, so the table is a round
+    checkpoint (``_util.checkpoint_rows``, the graph module's policy):
+    round N plans against a flat scan, never the nested history.
     """
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    f = (
+    f, _ = checkpoint_rows(
         edges.groupBy(F.col(src_col).alias("node"))
         .agg(F.min(F.col(dst_col)).alias("ptr"))
-        .repartition("node")
-        .persist()
+        .repartition("node"))
+    for _ in range(rounds):
+        g = f.select(F.col("node").alias("g_node"),
+                     F.col("ptr").alias("g_ptr"))
+        f, _ = checkpoint_rows(
+            f.join(g, f["ptr"] == g["g_node"], "left")
+            .select("node", F.coalesce("g_ptr", "ptr").alias("ptr")))
+    srcs = f.select(F.col("node").alias("s")).distinct()
+    return f.join(srcs, f["ptr"] == srcs["s"], "left").select(
+        F.col("node").alias("src"),
+        F.col("ptr").alias("final"),
+        F.col("s").isNull().alias("resolved"),
     )
-    f.count()
-    prev = None
-    try:
-        for _ in range(rounds):
-            g = f.select(F.col("node").alias("g_node"),
-                         F.col("ptr").alias("g_ptr"))
-            nxt = (
-                f.join(g, f["ptr"] == g["g_node"], "left")
-                .select("node",
-                        F.coalesce("g_ptr", "ptr").alias("ptr"))
-                .persist()
-            )
-            nxt.count()
-            if prev is not None:
-                prev.unpersist()
-            prev, f = f, nxt
-        srcs = f.select(F.col("node").alias("s")).distinct()
-        out = (
-            f.join(srcs, f["ptr"] == srcs["s"], "left")
-            .select(
-                F.col("node").alias("src"),
-                F.col("ptr").alias("final"),
-                F.col("s").isNull().alias("resolved"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        if prev is not None:
-            prev.unpersist()
-        f.unpersist()
-    return out
 
 
 def mirror_candidates(

@@ -10,6 +10,16 @@ rep, the per-round wall + GC table — separating the three hypotheses:
 - GC / cache-eviction        -> GC delta tracks the slow rounds;
 - one-round-late unpersist   -> monotone per-round growth within a rep.
 
+Hypothesis 3 held, for a reason the persist handoff itself created: a
+persisted round's LOGICAL plan still nests every earlier round, so plan
+analysis and GC grew each round.  pagerank(iterations=10) on a 3,000-edge
+graph (local[4], 4 GB driver) logged round walls rising 0.65 -> 6.15 s
+and GC from tens of ms to 1,050 ms per round; at 16 iterations even a
+7-edge graph ran out of heap.  With every round's state a local checkpoint
+(``operators/_util.checkpoint_rows``) the same run logs flat rounds of
+0.34-0.53 s with near-zero GC, and the whole call takes 6.0 s instead of
+23.3 s.  A spread this probe still shows points at hypothesis 1 or 2.
+
 Usage: python scripts/graph_jitter_probe.py [sf_dir] [reps]
 Writes one JSON line per rep to stdout (grep ^JITTER) for archiving.
 """

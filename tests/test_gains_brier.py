@@ -156,3 +156,30 @@ def test_brier_custom_scale(spark):
     assert r.brier_ppm == 2 * 10**6 // (2 * 16)
     with pytest.raises(ValueError):
         brier_score(_pdf(spark, rows), scale=0)
+
+
+def test_brier_oracle_survives_int64_overflow():
+    """The eval_brier DuckDB oracle on a documents table of 10,000 rows
+    with ~half positives (twice the largest gate corpus): its skill
+    numerator is ~1.75x the INT64 maximum, so BIGINT arithmetic raises
+    ``Overflow in multiplication of INT64``; promoted to HUGEINT it
+    matches the exact Python replay."""
+    import duckdb
+
+    import __spark_entry__ as entry
+
+    n = 10_000
+    docs = [(i, (i * 37) % 600) for i in range(n)]
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, n_chars BIGINT)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", docs)
+    got = con.execute(entry.Q_EVAL_BRIER_SQL).fetchall()
+
+    ps = [max(0, min(1000, (c // 10 + d % 7) * 16)) for d, c in docs]
+    ys = [1000 if c >= 300 else 0 for _, c in docs]
+    pos = sum(1 for y in ys if y)
+    ssq = sum((p - y) ** 2 for p, y in zip(ps, ys))
+    ref = 10**6 * pos * (n - pos)
+    num = 10**6 * (ref - ssq * n)
+    assert abs(num) > 2**63          # the case BIGINT cannot hold
+    assert got == [(n, pos, ssq, ssq * 10**6 // (n * 10**6), num // ref)]

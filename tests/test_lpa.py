@@ -1,5 +1,6 @@
 """label_propagation: convergence on disjoint cliques, python brute
-replay differential, cache hygiene."""
+replay differential, and the cache hygiene of every iterative graph
+operator (pinned loop inputs are released on return and on error)."""
 
 import pytest
 
@@ -61,13 +62,63 @@ def test_brute_replay_differential(spark):
         assert out == _brute_lpa(pairs, rounds), rounds
 
 
-def test_no_pinned_cache_after_return(spark):
-    from picogeojson_spark.operators.graph import label_propagation
+class _FailingLog(list):
+    """An ``iteration_log`` whose second append raises: an error thrown
+    from inside the round loop, after the loop inputs are pinned."""
 
-    pairs = [(1, 2), (2, 3)]
-    label_propagation(_edges(spark, pairs), rounds=2).collect()
+    def append(self, rec):
+        if self:
+            raise RuntimeError("injected mid-loop failure")
+        super().append(rec)
+
+
+def _cache_cases():
+    from picogeojson_spark.operators import graph as G
+    from picogeojson_spark.operators.web import resolve_redirects
+
+    def sd(spark, pairs):
+        return spark.createDataFrame(pairs, "src long, dst long")
+
+    def nodes(spark, ids, col="node"):
+        return spark.createDataFrame([(i,) for i in ids], col + " long")
+
+    path = [(i, i + 1) for i in range(6)]
+    tri = [(1, 2), (2, 3), (1, 3), (3, 4)]
+    return {
+        "pagerank": lambda s: G.pagerank(sd(s, path), iterations=3),
+        "hits": lambda s: G.hits(sd(s, path), iterations=2),
+        "label_propagation": lambda s: G.label_propagation(
+            _edges(s, [(1, 2), (2, 3)]), rounds=2),
+        "bfs_hops": lambda s: G.bfs_hops(_edges(s, path), nodes(s, [0])),
+        "sssp_bounded": lambda s: G.sssp_bounded(
+            s.createDataFrame([(u, v, 2) for u, v in path],
+                              "u long, v long, w long"),
+            nodes(s, [0]), max_rounds=3),
+        "closeness_sample": lambda s: G.closeness_sample(
+            _edges(s, path), nodes(s, [0, 3], "seed")),
+        "k_core": lambda s: G.k_core(_edges(s, tri), 2),
+        "k_truss": lambda s: G.k_truss(_edges(s, tri), k=3),
+        "resolve_redirects": lambda s: resolve_redirects(
+            sd(s, path), rounds=3),
+        "pagerank_raises_mid_loop": lambda s: G.pagerank(
+            sd(s, path), iterations=3, iteration_log=_FailingLog()),
+        "hits_raises_mid_loop": lambda s: G.hits(
+            sd(s, path), iterations=3, iteration_log=_FailingLog()),
+        "k_core_raises_mid_loop": lambda s: G.k_core(
+            _edges(s, path), 2, max_rounds=1),
+    }
+
+
+@pytest.mark.parametrize("case", list(_cache_cases()))
+def test_no_pinned_cache_after_return(spark, case):
+    run = _cache_cases()[case]
+    if case.endswith("_raises_mid_loop"):
+        with pytest.raises(RuntimeError):
+            run(spark)
+    else:
+        run(spark).collect()
     jcm = spark._jsparkSession.sharedState().cacheManager()
-    assert jcm.isEmpty(), "label_propagation leaked persisted DataFrames"
+    assert jcm.isEmpty(), "{} leaked persisted DataFrames".format(case)
 
 
 def test_rounds_validation(spark):

@@ -74,6 +74,12 @@ def test_brute_differential(spark):
     seeds = [0, 11]
     for k in (1, 2, 4):
         assert _run(spark, edges, seeds, k) == _brute(edges, seeds, k), k
+    # weighted 15-node path with costly shortcuts: distances keep
+    # improving through round 11, so every round up to max_rounds runs
+    path = [(i, i + 1, 1 + (i * 5) % 7) for i in range(14)]
+    path += [(0, 7, 40), (3, 12, 30)]
+    for k in (6, 8):
+        assert _run(spark, path, [0], k) == _brute(path, [0], k), k
 
 
 def test_negative_rounds_raise(spark):

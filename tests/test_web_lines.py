@@ -376,6 +376,31 @@ def test_resolve_redirects_long_chain_needs_enough_rounds(spark):
     assert out4["n0"] == ("n9", True)
 
 
+def test_resolve_redirects_deep_rounds_match_chain_walk(spark):
+    from picogeojson_spark.operators.web import resolve_redirects
+
+    # a 300-link chain, a 3-cycle and a branch into the chain's middle
+    pairs = [("n%d" % i, "n%d" % (i + 1)) for i in range(300)]
+    pairs += [("c0", "c1"), ("c1", "c2"), ("c2", "c0"), ("b", "n150")]
+    ptr = dict(pairs)
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    got = {}
+    for rounds in (8, 10):
+        want = {}
+        for src in ptr:
+            cur = src
+            for _ in range(2 ** rounds):
+                cur = ptr.get(cur, cur)
+            want[src] = (cur, cur not in ptr)
+        got[rounds] = {
+            r.src: (r.final, r.resolved)
+            for r in resolve_redirects(edges, rounds=rounds).collect()}
+        assert got[rounds] == want, rounds
+    # 2^8 hops stop short of the 300-link chain's end; 2^10 reach it
+    assert got[8]["n0"] == ("n256", False)
+    assert got[10]["n0"] == ("n300", True)
+
+
 def test_resolve_redirects_cache_hygiene(spark):
     from picogeojson_spark.operators.web import resolve_redirects
 
